@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}.  The core count defaults to the
+host's.
 """
 
 from __future__ import annotations
@@ -13,15 +14,10 @@ import time
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
-# Python WORKERS resolve cloudpickled UDFs via PYTHONPATH (read at session
-# start), not the driver's sys.path — export it so the bench runs from any
-# cwd (see tools/verify_drive.py for the failure mode).
-if _REPO not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
-    os.environ["PYTHONPATH"] = (
-        _REPO + os.pathsep + os.environ.get("PYTHONPATH", ""))
+
+from waimak_spark.session import local_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # ---------------------------------------------------------------------------
 # Load sentinel (VERDICT r8 #2): the host is co-tenanted, and an official
@@ -37,8 +33,9 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 #
 # Shape is frozen (rows, partition count, expression) — changing any of it
 # invalidates SENTINEL_REF_S.  64 fixed partitions keep the task shape
-# identical whatever CPUS is, but the REFERENCE is only meaningful on the
-# protocol's local[32]; other CPUS record samples with a null verdict.
+# identical whatever the core count is, but the REFERENCE is only meaningful
+# on the protocol's local[32]; other core counts record samples with a null
+# verdict.
 SENTINEL_ROWS = 1_000_000_000
 SENTINEL_PARTS = 64
 #: IN-LAP median across two same-day round-9 laps on separate JVMs,
@@ -110,33 +107,20 @@ def short_name(name: str) -> str:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from waimak_spark.catalog import queries
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("waimak_spark-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(
+        driver_memory=os.environ.get("SPARK_GRAFT_MEM", "24g"))
+    cores = spark.sparkContext.defaultParallelism
 
     qs = queries()
     # JVM/codegen warmup on the smallest table
     spark.read.parquet(f"{SF_DIR}/region.parquet").count()
     # Python-worker warmup: the first Arrow-batched UDF in a session pays
     # worker spawn + Arrow init; that cost is session setup, not a query.
-    # Spread over 2×CPUS partitions so the whole worker POOL spawns, not
+    # Spread over 2×cores partitions so the whole worker POOL spawns, not
     # just one worker (measured ~3 s hiding in the first pandas_udf query)
-    (spark.range(int(CPUS) * 2).repartition(int(CPUS) * 2)
+    (spark.range(cores * 2).repartition(cores * 2)
      .mapInPandas(lambda it: it, "id long").count())
     # storage warmup: building the audit table (two appends + compaction)
     # is data LOADING; the benched queries are the snapshot/range reads
@@ -218,7 +202,8 @@ def main() -> None:
     sentinel_median = round(statistics.median(sentinel_runs), 3)
     load_factor = round(sentinel_median / SENTINEL_REF_S, 3)
     # the pinned reference is only meaningful on the protocol's local[32]
-    contaminated = (load_factor > SENTINEL_LOAD_FLAG) if CPUS == "32" else None
+    contaminated = ((load_factor > SENTINEL_LOAD_FLAG) if cores == 32
+                    else None)
     print(f"# sentinel: {sentinel_runs}s median={sentinel_median} "
           f"ref={SENTINEL_REF_S} load_factor={load_factor} "
           f"contaminated={contaminated}", file=sys.stderr)

@@ -1,13 +1,13 @@
 """Retired catalog entries stay verified.
 
-Retirement (PARITY rotation ledger) removes an entry from the driver's
-50-entry official window to free a slot for a new operator family — it is
-a COVERAGE decision, not a deletion.  Every retired (fn, oracle) pair
-keeps running the exact same DuckDB lockstep the live catalog runs
-(tests/test_catalog_oracle.py), so e.g. "all 22 TPC-H queries verified"
-stays true every pytest run even though q12/q17 no longer burn official
-window slots.  Bookkeeping: each retirement names machinery witnesses
-that keep the operator family officially covered in the rotation.
+Retirement removes an entry from the gate's 50-entry official window to
+free a slot for a new operator family — it is a COVERAGE decision, not a
+deletion.  Every retired (fn, oracle) pair keeps running the exact same
+DuckDB lockstep the live catalog runs (tests/test_catalog_oracle.py), so
+e.g. "all 22 TPC-H queries verified" stays true every pytest run even
+though q12/q17 no longer burn official window slots.  Bookkeeping: each
+retirement names machinery witnesses that keep the operator family
+officially covered in the rotation.
 """
 
 import duckdb
@@ -51,13 +51,26 @@ def test_retired_entry_still_matches_oracle(name, spark, sf_dir, duck):
 
 
 def test_retirement_bookkeeping():
-    """Every retired entry is OUT of the driver catalog, carries a round
-    tag and at least one machinery witness still holding a catalog slot,
-    and has its oracle preserved (lockstep above stays meaningful)."""
+    """Every retired entry is OUT of the catalog, names at least
+    one machinery witness still holding a catalog slot, and has its
+    oracle preserved (lockstep above stays meaningful)."""
     for name, entry in RETIRED_ENTRIES.items():
         assert name not in ALL_ENTRIES, name
-        assert entry["retired"].startswith("r"), name
         assert entry["witnesses"], f"{name} retired without a witness"
         for w in entry["witnesses"]:
             assert w in ALL_ENTRIES, f"{name}: witness {w} not in catalog"
         assert entry.get("oracle"), f"{name} lost its oracle at retirement"
+
+
+def test_retired_entries_left_with_green_rows():
+    """Every retired entry holds a green official row: retirement is a
+    coverage decision, never a way to park a failing entry."""
+    from waimak_spark.catalog.window import correctness_history, green
+
+    history = correctness_history()
+    if not history:
+        pytest.skip("no correctness file yet")
+    ever_green = set().union(*(green(rows) for rows in history))
+    never_green = sorted(set(RETIRED_ENTRIES) - ever_green)
+    assert not never_green, (
+        f"retired without any official green row: {never_green}")

@@ -5,7 +5,8 @@ co-tenant load and GC from 200+ queries in one JVM; this is the
 per-change accept/reject signal).
 
 Usage: python tools/measure_entry.py <entry_name> [sf_dir] [laps]
-Prints one JSON line {"entry", "laps", "min"}.
+Runs on local[$SPARK_GRAFT_CPUS] (default: the host's cores) and prints
+one JSON line {"entry", "laps", "min"}.
 """
 
 import json
@@ -13,48 +14,21 @@ import os
 import sys
 import time
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
-# workers resolve cloudpickled UDFs via PYTHONPATH, not driver sys.path
-os.environ["PYTHONPATH"] = (
-    _REPO + os.pathsep + os.environ.get("PYTHONPATH", ""))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from waimak_spark.catalog import resolve_entry
+    from waimak_spark.functions.cache_registry import release_tracked
+    from waimak_spark.session import local_session
 
     name = sys.argv[1]
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     laps = int(sys.argv[3]) if len(sys.argv) > 3 else 6
     if laps < 1:
         raise SystemExit("laps must be >= 1 (one untimed warmup always runs)")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory", "16g")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from waimak_spark import catalog
-    from waimak_spark.functions.cache_registry import release_tracked
-
-    if name in catalog.ALL_ENTRIES:
-        fn = catalog.ALL_ENTRIES[name]["fn"]
-    elif name in catalog.EXTRA_ENTRIES:
-        # rotation-ledger admission candidates measured before a catalog
-        # slot opens (single registry shared with tools/scale_check.py)
-        fn = catalog.EXTRA_ENTRIES[name]
-    elif name in catalog.RETIRED_ENTRIES:
-        # retired rotation entries stay measurable (retirement is a
-        # driver-window coverage decision, not a deletion)
-        fn = catalog.RETIRED_ENTRIES[name]["fn"]
-    else:
-        raise SystemExit(f"unknown entry: {name}")
+    fn = resolve_entry(name)
+    spark = local_session(driver_memory="16g")
     times = []
     for i in range(laps + 1):  # lap 0 is the untimed warmup
         t0 = time.time()

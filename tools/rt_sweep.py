@@ -6,7 +6,8 @@ protocol-grade before/after instrument for construction-tax work even on
 a busy host (unlike wall-clock).
 
 Usage: python tools/rt_sweep.py [entry ...]   (default: whole catalog)
-Prints one JSON line per entry {"entry", "rts"} and a total.
+Runs on local[$SPARK_GRAFT_CPUS] (default: the host's cores).  Prints
+one JSON line per entry {"entry", "rts"} and a total.
 """
 
 from __future__ import annotations
@@ -15,10 +16,7 @@ import json
 import os
 import sys
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
-os.environ["PYTHONPATH"] = (
-    _REPO + os.pathsep + os.environ.get("PYTHONPATH", ""))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _COUNT = {"n": 0}
 
@@ -39,40 +37,22 @@ def _install_counter() -> None:
 
 def main() -> None:
     _install_counter()
-    from pyspark.sql import SparkSession
-
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory", "8g")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-
     from waimak_spark import catalog
     from waimak_spark.functions.cache_registry import release_tracked
+    from waimak_spark.session import local_session
 
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = sys.argv[1:] or list(catalog.ALL_ENTRIES)
+    fns = {name: catalog.resolve_entry(name) for name in names}
+    spark = local_session(driver_memory="8g")
+
     # warm the parse/analysis caches once so entry 1 doesn't absorb
     # session-setup round trips the others skip
     spark.read.parquet(f"{sf}/region.parquet").count()
     out = {}
     for name in names:
-        if name in catalog.ALL_ENTRIES:
-            fn = catalog.ALL_ENTRIES[name]["fn"]
-        elif name in catalog.RETIRED_ENTRIES:
-            fn = catalog.RETIRED_ENTRIES[name]["fn"]
-        elif name in catalog.EXTRA_ENTRIES:
-            fn = catalog.EXTRA_ENTRIES[name]
-        else:
-            raise SystemExit(f"unknown entry: {name}")
         before = _COUNT["n"]
-        fn(spark, sf)
+        fns[name](spark, sf)
         out[name] = _COUNT["n"] - before
         release_tracked()
         spark.catalog.clearCache()

@@ -5,9 +5,9 @@ tables under /tmp/scale10 (ids offset; text gets a per-copy suffix token
 and vectors a 1e-4 shift so replicas are near-dups, keeping the dedup
 candidate distribution realistic instead of pathological), then times
 each listed catalog operator warmed and cache-isolated at 1x and 10x on
-the same cores. Ideal linear scaling = ratio 10; candidate generators
-should come in well under despite the replicated corpus inflating the
-true pair count by ~1000x.
+the same cores ($SPARK_GRAFT_CPUS, default: the host's). Ideal linear
+scaling = ratio 10; candidate generators should come in well under
+despite the replicated corpus inflating the true pair count by ~1000x.
 
 Usage: python tools/scale_check.py
 """
@@ -89,11 +89,8 @@ RELATIONAL_QUERIES = [
     "asof_quote_per_trade", "range_join_shipments",
     "grouping_sets_quantity",
 ]
-# Non-catalog operators measured here anyway (rotation-ledger admission
-# candidates whose scale story must exist BEFORE a window slot opens):
-# the single name->fn registry lives in waimak_spark.catalog
-# (EXTRA_ENTRIES) so admitting a candidate edits ONE place; resolved
-# lazily in main() to keep module import light.
+# Non-catalog operators (catalog.EXTRA_ENTRIES) are measured too, so an
+# admission candidate's scale story exists before it takes a window slot.
 # Rows whose one-shot 10x timing has swung 2-4x between laps on this
 # co-tenanted host (VERDICT r7 #6): the table carries a second [warm]
 # min-of-3 row so the headline number is not the scariest outlier.
@@ -193,34 +190,19 @@ def build_replica() -> None:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
-    from waimak_spark.catalog import ALL_ENTRIES
+    from waimak_spark.catalog import EXTRA_ENTRIES, resolve_entry
     from waimak_spark.functions.cache_registry import release_tracked
+    from waimak_spark.session import local_session
 
-    # validate the subset BEFORE the expensive replica build + JVM start
     subset = os.environ.get("SPARK_GRAFT_QUERIES")
-    from waimak_spark.catalog import EXTRA_ENTRIES, RETIRED_ENTRIES
-
     names = ([n.strip() for n in subset.split(",") if n.strip()] if subset
              else (DOC_QUERIES + EVENT_QUERIES + STREAMING_QUERIES
                    + RELATIONAL_QUERIES + list(EXTRA_ENTRIES)))
-    # retired rotation entries stay measurable (retirement is a driver-
-    # window coverage decision, not a deletion — catalog.RETIRED_ENTRIES)
-    unknown = (set(names) - set(ALL_ENTRIES) - set(EXTRA_ENTRIES)
-               - set(RETIRED_ENTRIES))
-    if unknown:
-        raise SystemExit(f"unknown queries: {sorted(unknown)}")
+    # resolve BEFORE the expensive replica build + JVM start
+    fns = {name: resolve_entry(name) for name in names}
 
     build_replica()
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .config("spark.driver.memory", "24g")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(driver_memory="24g")
 
     def run(name: str, sf_dir: str) -> tuple[float, int]:
         release_tracked()
@@ -228,14 +210,8 @@ def main() -> None:
         # same GC hygiene as bench.py: collect OUTSIDE the timed window so
         # pauses from the replicated corpus's churn don't land in a timing
         spark._jvm.System.gc()
-        if name in ALL_ENTRIES:
-            fn = ALL_ENTRIES[name]["fn"]
-        elif name in EXTRA_ENTRIES:
-            fn = EXTRA_ENTRIES[name]
-        else:
-            fn = RETIRED_ENTRIES[name]["fn"]
         t0 = time.time()
-        df = fn(spark, sf_dir)
+        df = fns[name](spark, sf_dir)
         # noop-force like bench.py, NOT count(): count() lets Catalyst
         # prune every computed column, so a map-only operator (quality
         # metrics, signatures, fingerprints) would be "measured" as a bare

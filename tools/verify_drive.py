@@ -4,26 +4,15 @@ import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
-# Python WORKERS don't inherit the driver's sys.path mutation: cloudpickled
-# UDFs reference waimak_spark by module name, so a run launched from any
-# other cwd dies with ModuleNotFoundError in the worker.  PYTHONPATH is
-# read by the worker launcher, making the drive cwd-independent.
-os.environ["PYTHONPATH"] = (
-    "/root/repo" + os.pathsep + os.environ.get("PYTHONPATH", ""))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+
+from waimak_spark.session import local_session
 
 SF = "/root/testdata/sf0.001"
 
-spark = (SparkSession.builder.master("local[4]")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.ui.enabled", "false")
-         .getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+spark = local_session()
 
 out = tempfile.mkdtemp(prefix="verify_drive_")
 try:

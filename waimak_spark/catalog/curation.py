@@ -227,9 +227,8 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ann_lsh_pairs` slot (the `lsh_ann_pairs` operator keeps its unit
     tests; `dedup_embedding_cosine` keeps the LSH pair machinery's
     official row).  The round-9 window is fully forced (set-A), so the
-    entry takes the sanctioned STAGED_NEXT_ROUND path and fronts in
-    round 10; lockstep-verified every pytest run since round 7
-    (tests/test_dsir.py)."""
+    entry was staged outside it and fronted in round 10;
+    lockstep-verified every pytest run since round 7 (tests/test_dsir.py)."""
     docs = _docs(spark, sf_dir)
     # subset-target fast path (round 9): the target IS a raw-corpus
     # subset, so the corpus tokenizes once and the target model filters
@@ -988,8 +987,7 @@ ENTRIES = {
     "sample_weighted": {"fn": sample_weighted, "oracle": _weighted_oracle()},
     "decontaminate_near": {"fn": decontaminate_near_benchmark,
                            "oracle": _near_decontaminate_oracle()},
-    # round-9 admission (PARITY rotation ledger): staged this round,
-    # fronts round 10 — see catalog.STAGED_NEXT_ROUND
+    # round-9 admission
     "dsir_select": {"fn": dsir_select, "oracle": _dsir_select_oracle()},
     # round-11 admission (PARITY rotation ledger): fronts round 11 in the
     # slot freed by the same-round `dedup_against_corpus` retirement (the

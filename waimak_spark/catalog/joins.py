@@ -156,7 +156,7 @@ def _er_link_oracle() -> str:
 ENTRIES = {
     "asof_quote_per_trade": {"fn": asof_quote_per_trade,
                              "oracle": ASOF_ORACLE},
-    # round-11 STAGED admission (fronts round 12 per the rotation ledger)
+    # round-11 admission
     "copurchase_pagerank": {"fn": copurchase_pagerank,
                             "oracle": _pagerank_oracle()},
     "range_join_shipments": {"fn": range_join_shipments,

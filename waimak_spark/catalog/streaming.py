@@ -834,7 +834,7 @@ ENTRIES = {
         "fn": streaming_trade_quote_join,
         "oracle": STREAMING_SSJ_ORACLE,
     },
-    # round-12 STAGED admission (fronts round 13 per the rotation ledger)
+    # round-12 admission
     "streaming_running_totals_stateful": {
         "fn": streaming_running_totals_stateful,
         "oracle": STREAMING_STATEFUL_TOTALS_ORACLE,

@@ -470,7 +470,7 @@ ENTRIES = {
     "dedup_minhash_verified_resolve": {
         "fn": dedup_minhash_verified_resolve,
         "oracle": D.minhash_verified_resolve_sql()},
-    # round-11 STAGED admissions (front round 12 per the rotation ledger)
+    # round-11 admissions
     "corpus_heavy_hitters": {"fn": corpus_heavy_hitters,
                              "oracle": _heavy_hitters_oracle()},
     # rows-only by design: the greedy merge loop is iterative (the
@@ -479,7 +479,7 @@ ENTRIES = {
     "bpe_merges": {"fn": bpe_merges, "oracle": None},
     "doc_winnow_fingerprints": {"fn": doc_winnow_fingerprints,
                                 "oracle": _winnow_oracle()},
-    # round-12 STAGED admissions (front round 13 per the rotation ledger)
+    # round-12 admissions
     "corpus_distinct_hll": {"fn": corpus_distinct_hll,
                             "oracle": _distinct_hll_oracle()},
     "dedup_repeated_segments": {"fn": dedup_repeated_segments,
